@@ -27,14 +27,14 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from monolith_spark.operators import ranking as _ranking
 from monolith_spark.operators.text import bigram_lm_score, doc_bigrams, tokens_expr
+from monolith_spark.streaming.ledger import EpochSink, read_epochs, write_epoch
 
 
 @dataclass
-class ContinuousBigramLM:
+class ContinuousBigramLM(EpochSink):
     """foreachBatch sink maintaining additive unigram/bigram count
     state under ``path``; ``score(docs)`` / ``buckets(docs)`` apply
     the whole-stream model exactly as the batch operator would."""
@@ -46,58 +46,33 @@ class ContinuousBigramLM:
     def __post_init__(self) -> None:
         self.uni_path = os.path.join(self.path, "unigrams")
         self.bi_path = os.path.join(self.path, "bigrams")
-        self._epochs_dir = os.path.join(self.path, "_epochs")
-        os.makedirs(self._epochs_dir, exist_ok=True)
+        super().__post_init__()
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(self._epochs_dir, f"{epoch_id}.done")
-        if os.path.exists(marker):
-            return
+    def _apply(self, batch_df: DataFrame, epoch_id: int) -> None:
         batch = batch_df.select("doc_id", F.col(self.text_col).alias("text"))
-        epoch_dir = f"epoch={epoch_id}"
-        (
+        unigrams = (
             batch.select(F.explode(tokens_expr("text")).alias("tok"))
             .groupBy("tok")
             .agg(F.count("*").alias("c1"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(self.uni_path, epoch_dir))
         )
-        (
-            doc_bigrams(batch)
-            .groupBy("bg")
-            .agg(F.count("*").alias("c2"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(self.bi_path, epoch_dir))
-        )
-        with open(marker, "w") as f:
-            f.write("")
-
-    def start(self, docs_stream: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            docs_stream.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
-        )
+        write_epoch(unigrams, self.uni_path, epoch_id)
+        bigrams = doc_bigrams(batch).groupBy("bg").agg(F.count("*").alias("c2"))
+        write_epoch(bigrams, self.bi_path, epoch_id)
 
     def unigrams(self) -> DataFrame:
         """Merged whole-stream unigram table [tok, c1] — counts add, so
         this IS the batch table over everything streamed so far (empty
         before the first epoch lands)."""
-        if not os.path.exists(self.uni_path):
-            return self.spark.createDataFrame([], "tok string, c1 long")
         return (
-            self.spark.read.parquet(self.uni_path)
+            read_epochs(self.spark, self.uni_path, "tok string, c1 long")
             .groupBy("tok")
             .agg(F.sum("c1").alias("c1"))
         )
 
     def bigrams(self) -> DataFrame:
         """Merged whole-stream bigram table [bg, c2]."""
-        if not os.path.exists(self.bi_path):
-            return self.spark.createDataFrame([], "bg string, c2 long")
         return (
-            self.spark.read.parquet(self.bi_path)
+            read_epochs(self.spark, self.bi_path, "bg string, c2 long")
             .groupBy("bg")
             .agg(F.sum("c2").alias("c2"))
         )

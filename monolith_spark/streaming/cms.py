@@ -15,18 +15,17 @@ would hold the whole vocabulary in the state store.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from monolith_spark.operators.sketches import cms_estimate, cms_sketch
+from monolith_spark.streaming.ledger import EpochSink, read_epochs, write_epoch
 
 
 @dataclass
-class ContinuousCMS:
+class ContinuousCMS(EpochSink):
     """foreachBatch sink maintaining a count-min sketch of ``key_col``
     under ``path`` (epoch-partitioned parquet of counter partials)."""
 
@@ -36,34 +35,17 @@ class ContinuousCMS:
     depth: int = 3
     width: int = 1024
 
-    def __post_init__(self) -> None:
-        self._epochs_dir = self.path + "_epochs"
-        os.makedirs(self._epochs_dir, exist_ok=True)
-
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(self._epochs_dir, f"{epoch_id}.done")
-        if os.path.exists(marker):
-            return
-        cms_sketch(batch_df, self.key_col, self.depth, self.width).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(self.path, f"epoch={epoch_id}"))
-        with open(marker, "w") as f:
-            f.write("")
-
-    def start(self, stream_df: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
+    def _apply(self, batch_df: DataFrame, epoch_id: int) -> None:
+        write_epoch(
+            cms_sketch(batch_df, self.key_col, self.depth, self.width),
+            self.path,
+            epoch_id,
         )
 
     def sketch(self) -> DataFrame:
         """The merged whole-stream sketch [d, bucket, n]."""
-        if not os.path.exists(self.path):
-            return self.spark.createDataFrame([], "d int, bucket long, n long")
         return (
-            self.spark.read.parquet(self.path)
+            read_epochs(self.spark, self.path, "d int, bucket long, n long")
             .groupBy("d", "bucket")
             .agg(F.sum("n").alias("n"))
         )

@@ -27,13 +27,14 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+
+from monolith_spark.streaming.ledger import EpochSink, read_epochs, write_epoch
 
 _DEC = "decimal(18,2)"
 
 
 @dataclass
-class ContinuousCorrelation:
+class ContinuousCorrelation(EpochSink):
     """foreachBatch sink maintaining day-grain Pearson state under
     ``path``; ``correlations()`` derives the exact whole-stream
     per-series correlation vs the purchase trend.
@@ -54,8 +55,7 @@ class ContinuousCorrelation:
     def __post_init__(self) -> None:
         self.y_path = os.path.join(self.path, "y")
         self.x_path = os.path.join(self.path, "x")
-        self._epochs_dir = os.path.join(self.path, "_epochs")
-        os.makedirs(self._epochs_dir, exist_ok=True)
+        super().__post_init__()
 
     def _day(self):
         return (
@@ -64,51 +64,30 @@ class ContinuousCorrelation:
             .alias("day")
         )
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(self._epochs_dir, f"{epoch_id}.done")
-        if os.path.exists(marker):
-            return
+    def _apply(self, batch_df: DataFrame, epoch_id: int) -> None:
         s = batch_df.filter(F.col("timestamp").between(self.lo, self.hi))
         d = F.col("value").cast(_DEC)
-        epoch = f"epoch={epoch_id}"
-        (
-            s.groupBy("signature", self._day())
-            .agg(F.sum(d).cast(_DEC).alias("yv"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(self.y_path, epoch))
-        )
-        (
-            s.filter(
-                F.try_element_at("labels", F.lit("event_type")) == "purchase"
-            )
+        y = s.groupBy("signature", self._day()).agg(F.sum(d).cast(_DEC).alias("yv"))
+        write_epoch(y, self.y_path, epoch_id)
+        x = (
+            s.filter(F.try_element_at("labels", F.lit("event_type")) == "purchase")
             .groupBy(self._day())
             .agg(F.sum(d).cast(_DEC).alias("xv"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(self.x_path, epoch))
         )
-        with open(marker, "w") as f:
-            f.write("")
+        write_epoch(x, self.x_path, epoch_id)
 
-    def start(self, samples_stream: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            samples_stream.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
-        )
-
-    def _merged(self) -> tuple[DataFrame, DataFrame] | None:
+    def _merged(self) -> tuple[DataFrame, DataFrame]:
         """Whole-stream day-grain sums (exact DECIMAL re-association
         of the epoch partials)."""
-        if not (os.path.exists(self.y_path) and os.path.exists(self.x_path)):
-            return None
         y = (
-            self.spark.read.parquet(self.y_path)
+            read_epochs(
+                self.spark, self.y_path, f"signature string, day long, yv {_DEC}"
+            )
             .groupBy("signature", "day")
             .agg(F.sum("yv").cast(_DEC).alias("yv"))
         )
         x = (
-            self.spark.read.parquet(self.x_path)
+            read_epochs(self.spark, self.x_path, f"day long, xv {_DEC}")
             .groupBy("day")
             .agg(F.sum("xv").cast(_DEC).alias("xv"))
         )
@@ -141,12 +120,7 @@ class ContinuousCorrelation:
     def correlations(self) -> DataFrame:
         """[signature, n_days, corr] over everything streamed so far —
         identical to the batch ts_correlated_series construction."""
-        m = self._merged()
-        if m is None:
-            return self.spark.createDataFrame(
-                [], "signature string, n_days long, corr double"
-            )
-        y, x = m
+        y, x = self._merged()
         return self._corr_over(y.join(F.broadcast(x), "day"), ["signature"])
 
     def leading_indicators(self, max_lag: int = 3) -> DataFrame:
@@ -157,12 +131,7 @@ class ContinuousCorrelation:
         stream never keeps per-lag state."""
         from pyspark.sql import Window
 
-        m = self._merged()
-        if m is None:
-            return self.spark.createDataFrame(
-                [], "signature string, best_lag long, n_days long, corr double"
-            )
-        y, x = m
+        y, x = self._merged()
         yl = y.withColumn(
             "lag",
             F.explode(

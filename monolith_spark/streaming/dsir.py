@@ -27,13 +27,13 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from monolith_spark.operators.text import dsir_bucket_counts, dsir_scores
+from monolith_spark.streaming.ledger import EpochSink, read_epochs, write_epoch
 
 
 @dataclass
-class ContinuousDSIR:
+class ContinuousDSIR(EpochSink):
     """foreachBatch sink maintaining additive DSIR bucket-count state
     under ``path``; ``score(docs)`` applies the whole-stream model
     exactly as the batch operator would. ``target_pred`` is a SQL
@@ -48,40 +48,21 @@ class ContinuousDSIR:
 
     def __post_init__(self) -> None:
         self.counts_path = os.path.join(self.path, "bucket_counts")
-        self._epochs_dir = os.path.join(self.path, "_epochs")
-        os.makedirs(self._epochs_dir, exist_ok=True)
+        super().__post_init__()
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(self._epochs_dir, f"{epoch_id}.done")
-        if os.path.exists(marker):
-            return
-        (
-            dsir_bucket_counts(
-                batch_df, F.expr(self.target_pred), self.n_buckets, self.text_col
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(self.counts_path, f"epoch={epoch_id}"))
+    def _apply(self, batch_df: DataFrame, epoch_id: int) -> None:
+        counts = dsir_bucket_counts(
+            batch_df, F.expr(self.target_pred), self.n_buckets, self.text_col
         )
-        with open(marker, "w") as f:
-            f.write("")
-
-    def start(self, docs_stream: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            docs_stream.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
-        )
+        write_epoch(counts, self.counts_path, epoch_id)
 
     def bucket_counts(self) -> DataFrame:
         """Merged whole-stream [b, t_b, r_b] — counts add, so this IS
         the batch table over everything streamed so far (empty before
         the first epoch lands → dsir_scores degrades to the smoothed
         all-buckets-unseen model, every score 0)."""
-        if not os.path.exists(self.counts_path):
-            return self.spark.createDataFrame([], "b long, t_b long, r_b long")
         return (
-            self.spark.read.parquet(self.counts_path)
+            read_epochs(self.spark, self.counts_path, "b long, t_b long, r_b long")
             .groupBy("b")
             .agg(
                 F.sum("t_b").cast("long").alias("t_b"),

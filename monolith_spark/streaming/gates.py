@@ -19,18 +19,17 @@ idempotency as ContinuousCMS/KMV.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from monolith_spark.operators.text import token_count
+from monolith_spark.streaming.ledger import EpochSink, read_epochs, write_epoch
 
 
 @dataclass
-class ContinuousLengthGate:
+class ContinuousLengthGate(EpochSink):
     """foreachBatch sink maintaining per-source token-length histogram
     state under ``path``; ``thresholds()`` derives the exact [q05,q95]
     band per source over everything streamed so far."""
@@ -40,41 +39,21 @@ class ContinuousLengthGate:
     text_col: str = "text"
     source_col: str = "source"
 
-    def __post_init__(self) -> None:
-        self._epochs_dir = self.path + "_epochs"
-        os.makedirs(self._epochs_dir, exist_ok=True)
-
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(self._epochs_dir, f"{epoch_id}.done")
-        if os.path.exists(marker):
-            return
-        (
+    def _apply(self, batch_df: DataFrame, epoch_id: int) -> None:
+        hist = (
             batch_df.select(
                 F.col(self.source_col).alias("source"),
                 token_count(self.text_col).cast("long").alias("v"),
             )
             .groupBy("source", "v")
             .agg(F.count("*").alias("c"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(self.path, f"epoch={epoch_id}"))
         )
-        with open(marker, "w") as f:
-            f.write("")
-
-    def start(self, docs_stream: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            docs_stream.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
-        )
+        write_epoch(hist, self.path, epoch_id)
 
     def histogram(self) -> DataFrame:
         """Merged whole-stream histogram [source, v, c]."""
-        if not os.path.exists(self.path):
-            return self.spark.createDataFrame([], "source string, v long, c long")
         return (
-            self.spark.read.parquet(self.path)
+            read_epochs(self.spark, self.path, "source string, v long, c long")
             .groupBy("source", "v")
             .agg(F.sum("c").alias("c"))
         )

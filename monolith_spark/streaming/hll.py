@@ -19,16 +19,16 @@ exact count rather than a tolerance.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+
+from monolith_spark.streaming.ledger import EpochSink, read_epochs, write_epoch
 
 
 @dataclass
-class ContinuousHLL:
+class ContinuousHLL(EpochSink):
     """foreachBatch sink maintaining per-group HLL sketches of
     ``value_col`` under ``path`` (epoch-partitioned parquet)."""
 
@@ -38,50 +38,28 @@ class ContinuousHLL:
     group_cols: list[str] = field(default_factory=list)
     lgk: int = 12  # DataSketches lgConfigK; 12 → ~1.6% rsd, 4 KB max
 
-    def __post_init__(self) -> None:
-        self._epochs_dir = self.path + "_epochs"
-        os.makedirs(self._epochs_dir, exist_ok=True)
-
-    def _partial(self, batch_df: DataFrame) -> DataFrame:
-        agg = F.hll_sketch_agg(self.value_col, self.lgk).alias("sketch")
-        if self.group_cols:
-            return batch_df.groupBy(*self.group_cols).agg(agg)
-        return batch_df.agg(agg)
-
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(self._epochs_dir, f"{epoch_id}.done")
-        if os.path.exists(marker):
-            return
-        self._partial(batch_df).write.mode("overwrite").parquet(
-            os.path.join(self.path, f"epoch={epoch_id}")
+    def _apply(self, batch_df: DataFrame, epoch_id: int) -> None:
+        partial = batch_df.groupBy(*self.group_cols).agg(
+            F.hll_sketch_agg(self.value_col, self.lgk).alias("sketch")
         )
-        with open(marker, "w") as f:
-            f.write("")
-
-    def start(self, stream_df: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
-        )
+        write_epoch(partial, self.path, epoch_id)
 
     def read(self) -> DataFrame:
         """Merged estimates: [*group_cols, n_distinct]. Before the
         first epoch lands, group columns default to string in the
         empty frame (their true types are only known from data)."""
         schema = ", ".join(
-            [f"`{c}` string" for c in self.group_cols] + ["n_distinct long"]
+            [f"`{c}` string" for c in self.group_cols] + ["sketch binary"]
         )
-        if not os.path.exists(self.path):
-            return self.spark.createDataFrame([], schema)
-        p = self.spark.read.parquet(self.path)
-        merged = F.hll_union_agg("sketch").alias("merged")
-        if self.group_cols:
-            g = p.groupBy(*self.group_cols).agg(merged)
-        else:
-            g = p.agg(merged)
-        return g.select(
-            *self.group_cols,
-            F.hll_sketch_estimate("merged").alias("n_distinct"),
+        # a literal key keeps "no epochs → no rows" when ungrouped (a
+        # global aggregate would emit one zero-estimate row); a boolean,
+        # since an integer literal would be read as a GROUP BY ordinal
+        return (
+            read_epochs(self.spark, self.path, schema)
+            .groupBy(*(self.group_cols or [F.lit(True)]))
+            .agg(F.hll_union_agg("sketch").alias("merged"))
+            .select(
+                *self.group_cols,
+                F.hll_sketch_estimate("merged").alias("n_distinct"),
+            )
         )

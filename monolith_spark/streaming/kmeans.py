@@ -14,11 +14,12 @@ the then-current centroids), so a replayed epoch recomputes the same
 state: epoch e's output state is a pure function of (state after e−1,
 batch e). State files are keyed by epoch (``_state/<epoch>.json``,
 overwrite-on-replay) with the previous epoch's file as input — the
-same crash-and-replay contract as the ``.done`` ledgers elsewhere.
+same crash-and-replay contract as the epoch ledger the other sinks
+share (streaming/ledger.py), with the state file as the marker.
 
-Assignments for each batch are optionally materialized to
-``path/epoch_id=<n>/`` parquet (cluster-partitioned), making the
-stream's product directly queryable like the IVF index.
+Assignments for each batch are materialized to ``path/epoch_id=<n>/``
+parquet (cluster-partitioned), making the stream's product directly
+queryable like the IVF index.
 """
 
 from __future__ import annotations
@@ -29,13 +30,13 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from monolith_spark.operators.similarity import _dbl, sqdist_expr
+from monolith_spark.streaming.ledger import EpochSink, write_epoch
 
 
 @dataclass
-class StreamingKMeans:
+class StreamingKMeans(EpochSink):
     """foreachBatch mini-batch k-means: driver-held (centroids,
     counts) state, batch assignment + per-cluster sums in DataFrames."""
 
@@ -44,11 +45,9 @@ class StreamingKMeans:
     centroids: list[list[float]]
     id_col: str = "vec_id"
     vec_col: str = "embedding"
-    write_assignments: bool = True
     _counts: list[int] = field(init=False, repr=False, default_factory=list)
 
     def __post_init__(self) -> None:
-        os.makedirs(self.path, exist_ok=True)
         self._state_dir = os.path.join(self.path, "_state")
         os.makedirs(self._state_dir, exist_ok=True)
         self._counts = [0] * len(self.centroids)
@@ -93,17 +92,13 @@ class StreamingKMeans:
         )
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+        # the per-epoch state file is this sink's ledger: it carries
+        # the state, so it stands in for the shared epoch marker
         if os.path.exists(self._state_file(epoch_id)):
             return  # committed epoch — replay skips
         self._load_prior_state(epoch_id)
         assigned = self._assign(batch_df)
-        if self.write_assignments:
-            (
-                assigned.drop("__v")
-                .write.partitionBy("cluster_id")
-                .mode("overwrite")
-                .parquet(os.path.join(self.path, f"epoch_id={int(epoch_id)}"))
-            )
+        write_epoch(assigned.drop("__v"), self.path, epoch_id, "cluster_id")
         comp = assigned.select("cluster_id", F.posexplode("__v").alias("pos", "x"))
         sums = (
             comp.groupBy("cluster_id", "pos")
@@ -129,19 +124,6 @@ class StreamingKMeans:
         with open(tmp, "w") as fh:
             json.dump({"centroids": self.centroids, "counts": self._counts}, fh)
         os.replace(tmp, self._state_file(epoch_id))
-
-    # ------------------------------------------------------------ start
-    def start(
-        self, stream: DataFrame, checkpoint: str, trigger_seconds: float | None = None
-    ) -> StreamingQuery:
-        writer = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("update")
-        )
-        if trigger_seconds is not None:
-            writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-        return writer.start()
 
 
 def minibatch_kmeans_batch(

@@ -16,18 +16,17 @@ countDistinct would hold every key in the state store.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from monolith_spark.operators.sketches import kmv_estimate, kmv_sketch
+from monolith_spark.streaming.ledger import EpochSink, read_epochs, write_epoch
 
 
 @dataclass
-class ContinuousKMV:
+class ContinuousKMV(EpochSink):
     """foreachBatch sink maintaining per-group KMV sketches of
     ``key_col`` under ``path`` (epoch-partitioned parquet of k-row
     partials)."""
@@ -38,26 +37,11 @@ class ContinuousKMV:
     group_cols: list[str] = field(default_factory=lambda: ["grp"])
     k: int = 64
 
-    def __post_init__(self) -> None:
-        self._epochs_dir = self.path + "_epochs"
-        os.makedirs(self._epochs_dir, exist_ok=True)
-
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(self._epochs_dir, f"{epoch_id}.done")
-        if os.path.exists(marker):
-            return
-        kmv_sketch(batch_df, self.key_col, self.group_cols, self.k).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(self.path, f"epoch={epoch_id}"))
-        with open(marker, "w") as f:
-            f.write("")
-
-    def start(self, stream_df: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
+    def _apply(self, batch_df: DataFrame, epoch_id: int) -> None:
+        write_epoch(
+            kmv_sketch(batch_df, self.key_col, self.group_cols, self.k),
+            self.path,
+            epoch_id,
         )
 
     def sketch(self) -> DataFrame:
@@ -65,10 +49,12 @@ class ContinuousKMV:
         smallest distinct hashes per group across every epoch."""
         from pyspark.sql import Window
 
-        if not os.path.exists(self.path):
-            schema = ", ".join(f"{c} string" for c in self.group_cols) + ", h long"
-            return self.spark.createDataFrame([], schema)
-        u = self.spark.read.parquet(self.path).select(*self.group_cols, "h").distinct()
+        schema = ", ".join(f"{c} string" for c in self.group_cols) + ", h long"
+        u = (
+            read_epochs(self.spark, self.path, schema)
+            .select(*self.group_cols, "h")
+            .distinct()
+        )
         w = Window.partitionBy(*self.group_cols).orderBy("h")
         return (
             u.withColumn("__rn", F.row_number().over(w))

@@ -20,18 +20,17 @@ storage and mergeable.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from monolith_spark.operators.text import nb_score, nb_token_counts
+from monolith_spark.streaming.ledger import EpochSink, read_epochs, write_epoch
 
 
 @dataclass
-class ContinuousNBModel:
+class ContinuousNBModel(EpochSink):
     """foreachBatch sink maintaining NB token class-counts under
     ``path`` (epoch-partitioned parquet of count partials)."""
 
@@ -43,39 +42,21 @@ class ContinuousNBModel:
     max_tokens: int = 90
     min_stopword_ratio: float = 0.04
 
-    def __post_init__(self) -> None:
-        self._epochs_dir = self.path + "_epochs"
-        os.makedirs(self._epochs_dir, exist_ok=True)
-
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(self._epochs_dir, f"{epoch_id}.done")
-        if os.path.exists(marker):
-            return
-        nb_token_counts(
+    def _apply(self, batch_df: DataFrame, epoch_id: int) -> None:
+        counts = nb_token_counts(
             batch_df,
             self.id_col,
             self.text_col,
             self.min_tokens,
             self.max_tokens,
             self.min_stopword_ratio,
-        ).write.mode("overwrite").parquet(os.path.join(self.path, f"epoch={epoch_id}"))
-        with open(marker, "w") as f:
-            f.write("")
-
-    def start(self, stream_df: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
         )
+        write_epoch(counts, self.path, epoch_id)
 
     def counts(self) -> DataFrame:
         """The merged whole-stream model [tok, c_pos, c_neg]."""
-        if not os.path.exists(self.path):
-            return self.spark.createDataFrame([], "tok string, c_pos long, c_neg long")
         return (
-            self.spark.read.parquet(self.path)
+            read_epochs(self.spark, self.path, "tok string, c_pos long, c_neg long")
             .groupBy("tok")
             .agg(F.sum("c_pos").alias("c_pos"), F.sum("c_neg").alias("c_neg"))
         )

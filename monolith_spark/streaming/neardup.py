@@ -37,7 +37,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from monolith_spark.barrier import barrier as _lineage_barrier
 from monolith_spark.operators.dedup import (
@@ -45,12 +44,18 @@ from monolith_spark.operators.dedup import (
     minhash_band_signatures,
     minhash_signatures,
 )
+from monolith_spark.streaming.ledger import (
+    EpochSink,
+    prior_epochs,
+    read_epochs,
+    write_epoch,
+)
 
 _MATCH_SCHEMA = "new_doc_id long, old_doc_id long, jaccard double, epoch_id long"
 
 
 @dataclass
-class StreamingNearDupIndex:
+class StreamingNearDupIndex(EpochSink):
     """foreachBatch sink maintaining an incremental near-dup index.
 
     Matches surface as [new_doc_id, old_doc_id, jaccard, epoch_id]
@@ -69,28 +74,7 @@ class StreamingNearDupIndex:
         self.sig_path = os.path.join(self.path, "band_sigs")
         self.shingle_path = os.path.join(self.path, "shingles")
         self.match_path = os.path.join(self.path, "matches")
-        self._epochs_dir = os.path.join(self.path, "_epochs")
-        os.makedirs(self._epochs_dir, exist_ok=True)
-
-    def _epoch_done(self, epoch_id: int) -> bool:
-        return os.path.exists(os.path.join(self._epochs_dir, f"{epoch_id}.done"))
-
-    def _mark_epoch(self, epoch_id: int) -> None:
-        with open(os.path.join(self._epochs_dir, f"{epoch_id}.done"), "w") as f:
-            f.write("")
-
-    def _read_index(self, base: str, epoch_id: int) -> DataFrame | None:
-        """Prior epochs of a partitioned index table (None before the
-        first write). Excluding the current epoch makes replays after a
-        partial write safe: the batch never probes its own half-
-        persisted signatures."""
-        if not os.path.exists(base):
-            return None
-        return (
-            self.spark.read.parquet(base)
-            .filter(F.col("epoch_id") != epoch_id)
-            .drop("epoch_id")
-        )
+        super().__post_init__()
 
     def _verify(self, cands: DataFrame, sh_new: DataFrame, sh_old: DataFrame) -> DataFrame:
         """Exact shingle-Jaccard over candidate pairs only.
@@ -126,12 +110,9 @@ class StreamingNearDupIndex:
             .select("new_doc_id", "old_doc_id", "jaccard")
         )
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if self._epoch_done(epoch_id):
-            return
+    def _apply(self, batch_df: DataFrame, epoch_id: int) -> None:
         batch = batch_df.select("doc_id", "text")
         if batch.isEmpty():
-            self._mark_epoch(epoch_id)
             return
         batch = batch.transform(_lineage_barrier, eager=True)
         sigs = minhash_band_signatures(
@@ -159,7 +140,7 @@ class StreamingNearDupIndex:
         )
         matches = self._verify(within, sh_new, sh_new)
 
-        old_sigs = self._read_index(self.sig_path, epoch_id)
+        old_sigs = prior_epochs(self.spark, self.sig_path, epoch_id)
         if old_sigs is not None:
             cross = (
                 sigs.join(
@@ -171,34 +152,18 @@ class StreamingNearDupIndex:
                 .select(F.col("doc_id").alias("new_doc_id"), "old_doc_id")
                 .distinct()
             )
-            old_sh = self._read_index(self.shingle_path, epoch_id)
+            old_sh = prior_epochs(self.spark, self.shingle_path, epoch_id)
             matches = matches.unionByName(self._verify(cross, sh_new, old_sh))
 
         # Materialize once; all writes below overwrite THIS epoch's
         # partition directory, so replays are idempotent.
         matches = matches.transform(_lineage_barrier, eager=True)
-        epoch_dir = f"epoch_id={epoch_id}"
         if not matches.isEmpty():
-            matches.write.mode("overwrite").parquet(
-                os.path.join(self.match_path, epoch_dir)
-            )
-        sigs.write.mode("overwrite").parquet(os.path.join(self.sig_path, epoch_dir))
-        sh_new.write.mode("overwrite").parquet(
-            os.path.join(self.shingle_path, epoch_dir)
-        )
-        self._mark_epoch(epoch_id)
-
-    def start(self, docs_stream: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            docs_stream.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
-        )
+            write_epoch(matches, self.match_path, epoch_id)
+        write_epoch(sigs, self.sig_path, epoch_id)
+        write_epoch(sh_new, self.shingle_path, epoch_id)
 
     def matches(self) -> DataFrame:
-        if not os.path.exists(self.match_path):
-            return self.spark.createDataFrame([], _MATCH_SCHEMA)
-        return self.spark.read.parquet(self.match_path).select(
+        return read_epochs(self.spark, self.match_path, _MATCH_SCHEMA).select(
             "new_doc_id", "old_doc_id", "jaccard", F.col("epoch_id").cast("long")
         )

@@ -29,7 +29,7 @@ Per micro-batch:
 
 Replay safety mirrors StreamingNearDupIndex: every write targets the
 replayed epoch's own partition (overwrite), the cross-batch probe
-excludes the current epoch's partition, and a ``.done`` ledger
+excludes the current epoch's partition, and the epoch ledger
 fast-skips fully completed epochs — a crash between writes cannot
 double-ingest, double-report, or self-match a half-persisted batch.
 """
@@ -41,17 +41,21 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-
-from monolith_spark.operators.multimodal import image_hashes, with_hash_bands
 
 from monolith_spark.barrier import barrier as _lineage_barrier
+from monolith_spark.operators.multimodal import image_hashes, with_hash_bands
+from monolith_spark.streaming.ledger import (
+    EpochSink,
+    prior_epochs,
+    read_epochs,
+    write_epoch,
+)
 
 _MATCH_SCHEMA = "new_media_id long, old_media_id long, hamming long, epoch_id long"
 
 
 @dataclass
-class StreamingImageDedupIndex:
+class StreamingImageDedupIndex(EpochSink):
     """foreachBatch sink maintaining an incremental image-dedup index.
 
     Matches surface as [new_media_id, old_media_id, hamming, epoch_id]
@@ -69,24 +73,7 @@ class StreamingImageDedupIndex:
             raise ValueError(f"64 not divisible by {self.max_hamming + 1} bands")
         self.band_path = os.path.join(self.path, "bands")
         self.match_path = os.path.join(self.path, "matches")
-        self._epochs_dir = os.path.join(self.path, "_epochs")
-        os.makedirs(self._epochs_dir, exist_ok=True)
-
-    def _epoch_done(self, epoch_id: int) -> bool:
-        return os.path.exists(os.path.join(self._epochs_dir, f"{epoch_id}.done"))
-
-    def _mark_epoch(self, epoch_id: int) -> None:
-        with open(os.path.join(self._epochs_dir, f"{epoch_id}.done"), "w") as f:
-            f.write("")
-
-    def _old_bands(self, epoch_id: int) -> DataFrame | None:
-        if not os.path.exists(self.band_path):
-            return None
-        return (
-            self.spark.read.parquet(self.band_path)
-            .filter(F.col("epoch_id") != epoch_id)
-            .drop("epoch_id")
-        )
+        super().__post_init__()
 
     def _hamming_matches(self, cands: DataFrame) -> DataFrame:
         """[new_media_id, new_hash, old_media_id, old_hash] candidates
@@ -102,12 +89,9 @@ class StreamingImageDedupIndex:
             .select("new_media_id", "old_media_id", "hamming")
         )
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if self._epoch_done(epoch_id):
-            return
+    def _apply(self, batch_df: DataFrame, epoch_id: int) -> None:
         batch = batch_df.select("media_id", "payload")
         if batch.isEmpty():
-            self._mark_epoch(epoch_id)
             return
         hashes = (
             image_hashes(batch)
@@ -135,7 +119,7 @@ class StreamingImageDedupIndex:
         )
         matches = self._hamming_matches(within)
 
-        old = self._old_bands(epoch_id)
+        old = prior_epochs(self.spark, self.band_path, epoch_id)
         if old is not None:
             cross = bands.join(
                 old.select(
@@ -154,28 +138,12 @@ class StreamingImageDedupIndex:
             matches = matches.unionByName(self._hamming_matches(cross))
 
         matches = matches.transform(_lineage_barrier, eager=True)
-        epoch_dir = f"epoch_id={epoch_id}"
         if not matches.isEmpty():
-            matches.write.mode("overwrite").parquet(
-                os.path.join(self.match_path, epoch_dir)
-            )
-        bands.write.mode("overwrite").parquet(
-            os.path.join(self.band_path, epoch_dir)
-        )
-        self._mark_epoch(epoch_id)
-
-    def start(self, media_stream: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            media_stream.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
-        )
+            write_epoch(matches, self.match_path, epoch_id)
+        write_epoch(bands, self.band_path, epoch_id)
 
     def matches(self) -> DataFrame:
-        if not os.path.exists(self.match_path):
-            return self.spark.createDataFrame([], _MATCH_SCHEMA)
-        return self.spark.read.parquet(self.match_path).select(
+        return read_epochs(self.spark, self.match_path, _MATCH_SCHEMA).select(
             "new_media_id", "old_media_id", "hamming",
             F.col("epoch_id").cast("long"),
         )

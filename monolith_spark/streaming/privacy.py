@@ -18,16 +18,16 @@ streaming-state-store groupBy would pin it in executor memory instead.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+
+from monolith_spark.streaming.ledger import EpochSink, read_epochs, write_epoch
 
 
 @dataclass
-class ContinuousKAnonymity:
+class ContinuousKAnonymity(EpochSink):
     """foreachBatch sink maintaining per-group distinct-user ledgers
     under ``path``; ``release()`` applies the k bound to everything
     streamed so far."""
@@ -38,40 +38,22 @@ class ContinuousKAnonymity:
     user_col: str = "user_id"
     k: int = 5
 
-    def __post_init__(self) -> None:
-        self._epochs_dir = self.path + "_epochs"
-        os.makedirs(self._epochs_dir, exist_ok=True)
-
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(self._epochs_dir, f"{epoch_id}.done")
-        if os.path.exists(marker):
-            return
-        (
-            batch_df.groupBy(*self.quasi_cols, self.user_col)
-            .agg(F.count("*").alias("n_events"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(self.path, f"epoch={epoch_id}"))
-        )
-        with open(marker, "w") as f:
-            f.write("")
-
-    def start(self, stream_df: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
+    def _apply(self, batch_df: DataFrame, epoch_id: int) -> None:
+        write_epoch(
+            batch_df.groupBy(*self.quasi_cols, self.user_col).agg(
+                F.count("*").alias("n_events")
+            ),
+            self.path,
+            epoch_id,
         )
 
     def ledger(self) -> DataFrame:
         """The merged [quasi..., user, n_events] ledger so far."""
-        if not os.path.exists(self.path):
-            schema = ", ".join(f"{c} string" for c in self.quasi_cols)
-            return self.spark.createDataFrame(
-                [], f"{schema}, {self.user_col} long, n_events long"
-            )
+        schema = ", ".join(f"{c} string" for c in self.quasi_cols)
         return (
-            self.spark.read.parquet(self.path)
+            read_epochs(
+                self.spark, self.path, f"{schema}, {self.user_col} long, n_events long"
+            )
             .groupBy(*self.quasi_cols, self.user_col)
             .agg(F.sum("n_events").alias("n_events"))
         )

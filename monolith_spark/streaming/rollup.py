@@ -23,83 +23,46 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from monolith_spark.engine import MonolithDB
 from monolith_spark.labels import series_id_expr
-
-
-def bucket_partials(samples: DataFrame, step_ms: int) -> DataFrame:
-    """Mergeable partial aggregates per (series_id, bucket_ms)."""
-    bucket = (F.floor(F.col("timestamp") / F.lit(step_ms)) * F.lit(step_ms)).cast("long")
-    return (
-        samples.select(
-            series_id_expr("labels").alias("series_id"),
-            bucket.alias("bucket_ms"),
-            "value",
-        )
-        .groupBy("series_id", "bucket_ms")
-        .agg(
-            F.sum(F.col("value").cast("decimal(28,6)")).alias("psum"),
-            F.count("*").alias("pcount"),
-            F.min("value").alias("pmin"),
-            F.max("value").alias("pmax"),
-        )
-    )
+from monolith_spark.streaming.ledger import EpochSink, read_epochs, write_epoch
 
 
 @dataclass
-class ContinuousRollup:
+class ContinuousRollup(EpochSink):
     """foreachBatch sink maintaining the rollup table beside a
-    MonolithDB (path: <db>/rollup_<step_ms>)."""
+    MonolithDB (path: <db>/rollup_<step_ms>). Each epoch stages the
+    engine's own tiering aggregate (MonolithDB._rollup) over the
+    batch, so streamed and batch rollups share one construction."""
 
     db: MonolithDB
     step_ms: int
 
     def __post_init__(self) -> None:
         self.path = os.path.join(self.db.path, f"rollup_{self.step_ms}")
-        self._epochs_dir = self.path + "_epochs"
-        os.makedirs(self._epochs_dir, exist_ok=True)
+        super().__post_init__()
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(self._epochs_dir, f"{epoch_id}.done")
-        if os.path.exists(marker):
-            return
-        # Per-epoch partition dir + overwrite: a replay after a crash
-        # BETWEEN the write and the marker rewrites the same dir rather
-        # than appending a second copy — idempotent even without the
-        # marker (which remains as a cheap skip).
-        bucket_partials(batch_df, self.step_ms).write.mode("overwrite").parquet(
-            os.path.join(self.path, f"epoch={epoch_id}")
-        )
-        with open(marker, "w") as f:
-            f.write("")
-
-    def start(self, stream_df: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
-        )
+    def _apply(self, batch_df: DataFrame, epoch_id: int) -> None:
+        keyed = batch_df.withColumn("series_id", series_id_expr("labels"))
+        write_epoch(self.db._rollup(keyed, self.step_ms), self.path, epoch_id)
 
     def read(self) -> DataFrame:
         """Merged rollup: [series_id, bucket_ms, sum_value, n_points,
         min_value, max_value, avg_value]."""
-        if not os.path.exists(self.path):
-            return self.db.spark.createDataFrame(
-                [],
-                "series_id long, bucket_ms long, sum_value double, "
-                "n_points long, min_value double, max_value double, avg_value double",
-            )
-        p = self.db.spark.read.parquet(self.path)
+        p = read_epochs(
+            self.db.spark,
+            self.path,
+            "series_id long, bucket_ms long, n_points long, "
+            "sum_value decimal(28,6), min_value double, max_value double",
+        )
         return (
             p.groupBy("series_id", "bucket_ms")
             .agg(
-                F.sum("psum").alias("dsum"),
-                F.sum("pcount").alias("n_points"),
-                F.min("pmin").alias("min_value"),
-                F.max("pmax").alias("max_value"),
+                F.sum("sum_value").alias("dsum"),
+                F.sum("n_points").alias("n_points"),
+                F.min("min_value").alias("min_value"),
+                F.max("max_value").alias("max_value"),
             )
             .select(
                 "series_id",

@@ -29,7 +29,7 @@ fetch. Per micro-batch:
 
 Replay safety is the neardup idiom verbatim: every write targets the
 replayed epoch's own partition (overwrite), the cross-batch probe
-excludes the current epoch's partition, and a ``.done`` ledger
+excludes the current epoch's partition, and the epoch ledger
 fast-paths completed epochs.
 """
 
@@ -40,11 +40,15 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-
-from monolith_spark.operators.text import winnow_fingerprints_expr
 
 from monolith_spark.barrier import barrier as _lineage_barrier
+from monolith_spark.operators.text import winnow_fingerprints_expr
+from monolith_spark.streaming.ledger import (
+    EpochSink,
+    prior_epochs,
+    read_epochs,
+    write_epoch,
+)
 
 _MATCH_SCHEMA = (
     "new_doc_id long, old_doc_id long, shared long, containment double, epoch_id long"
@@ -52,7 +56,7 @@ _MATCH_SCHEMA = (
 
 
 @dataclass
-class StreamingWinnowIndex:
+class StreamingWinnowIndex(EpochSink):
     """foreachBatch sink maintaining an incremental winnowing
     copy-detection index.
 
@@ -71,24 +75,7 @@ class StreamingWinnowIndex:
     def __post_init__(self) -> None:
         self.fp_path = os.path.join(self.path, "fingerprints")
         self.match_path = os.path.join(self.path, "matches")
-        self._epochs_dir = os.path.join(self.path, "_epochs")
-        os.makedirs(self._epochs_dir, exist_ok=True)
-
-    def _epoch_done(self, epoch_id: int) -> bool:
-        return os.path.exists(os.path.join(self._epochs_dir, f"{epoch_id}.done"))
-
-    def _mark_epoch(self, epoch_id: int) -> None:
-        with open(os.path.join(self._epochs_dir, f"{epoch_id}.done"), "w") as f:
-            f.write("")
-
-    def _prior_fps(self, epoch_id: int) -> DataFrame | None:
-        if not os.path.exists(self.fp_path):
-            return None
-        return (
-            self.spark.read.parquet(self.fp_path)
-            .filter(F.col("epoch_id") != epoch_id)
-            .drop("epoch_id")
-        )
+        super().__post_init__()
 
     def _score(self, cands: DataFrame, n_new: DataFrame) -> DataFrame:
         """[new_doc_id, old_doc_id, fp] candidate hits → scored
@@ -109,12 +96,9 @@ class StreamingWinnowIndex:
             .select("new_doc_id", "old_doc_id", "shared", "containment")
         )
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if self._epoch_done(epoch_id):
-            return
+    def _apply(self, batch_df: DataFrame, epoch_id: int) -> None:
         batch = batch_df.select("doc_id", "text")
         if batch.isEmpty():
-            self._mark_epoch(epoch_id)
             return
         fps = (
             batch.select(
@@ -137,7 +121,7 @@ class StreamingWinnowIndex:
         )
         matches = self._score(within, n_new)
 
-        old = self._prior_fps(epoch_id)
+        old = prior_epochs(self.spark, self.fp_path, epoch_id)
         if old is not None:
             cross = fps.join(
                 old.select(F.col("doc_id").alias("old_doc_id"), "fp"), "fp"
@@ -145,23 +129,9 @@ class StreamingWinnowIndex:
             matches = matches.unionByName(self._score(cross, n_new))
 
         matches = matches.transform(_lineage_barrier, eager=True)
-        epoch_dir = f"epoch_id={epoch_id}"
         if not matches.isEmpty():
-            matches.write.mode("overwrite").parquet(
-                os.path.join(self.match_path, epoch_dir)
-            )
-        fps.write.mode("overwrite").parquet(os.path.join(self.fp_path, epoch_dir))
-        self._mark_epoch(epoch_id)
-
-    def start(self, docs_stream: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            docs_stream.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
-        )
+            write_epoch(matches, self.match_path, epoch_id)
+        write_epoch(fps, self.fp_path, epoch_id)
 
     def matches(self) -> DataFrame:
-        if not os.path.exists(self.match_path):
-            return self.spark.createDataFrame([], _MATCH_SCHEMA)
-        return self.spark.read.parquet(self.match_path)
+        return read_epochs(self.spark, self.match_path, _MATCH_SCHEMA)

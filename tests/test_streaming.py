@@ -70,6 +70,41 @@ def test_epoch_ledger_makes_replay_idempotent(spark, tmp_path):
     assert [(p["timestamp"], p["value"]) for p in res[0]["points"]] == [(1000, 1.0)]
 
 
+def test_stream_ingest_feeds_with_own_checkpoints_share_one_db(spark, tmp_path):
+    # Every new checkpoint numbers its epochs from 0: a ledger keyed by
+    # epoch id alone made the second feed's batches look like replays
+    # of the first's and silently skipped them.
+    db = MonolithDB(spark, str(tmp_path / "db"), chunk_size_ms=60_000)
+    for job in ("a", "b"):
+        src = str(tmp_path / f"src_{job}")
+        _write_slice(spark, src, [({"job": job}, 1000, 1.0)])
+        q = StreamingIngest(db).start(
+            samples_file_stream(spark, src), str(tmp_path / f"ckpt_{job}")
+        )
+        q.processAllAvailable()
+        q.stop()
+    for job in ("a", "b"):
+        assert db.query_flat({"job": job}, 0, 10_000).count() == 1
+
+
+def test_stream_ingest_processing_time_trigger(spark, tmp_path):
+    # ST1: the chunk-swap timer maps onto a processing-time trigger
+    src = str(tmp_path / "src")
+    _write_slice(spark, src, [({"m": "t"}, 1000, 1.0), ({"m": "t"}, 61_000, 2.0)])
+    db = MonolithDB(spark, str(tmp_path / "db"), chunk_size_ms=60_000)
+    q = StreamingIngest(db).start(
+        samples_file_stream(spark, src), str(tmp_path / "ckpt"), trigger_seconds=1
+    )
+    try:
+        assert "ProcessingTime" in q._jsq.streamingQuery().trigger().toString()
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    res = db.query({"m": "t"}, 0, 100_000).collect()
+    assert [(p["timestamp"], p["value"]) for p in res[0]["points"]] == [
+        (1000, 1.0), (61_000, 2.0)]
+
+
 def test_stream_events_fixture_matches_batch(spark, tmp_path, sf_dir):
     # M3: the driver's events table streamed through the full ingest
     # path must agree with the batch mapping (which the DuckDB oracles
@@ -1368,3 +1403,82 @@ def test_stream_ingest_keeps_label_index_fresh(spark, tmp_path):
     assert db._index_fresh(man)  # fresh after batches
     assert db.query_flat({"m": "b"}, 0, 100_000).count() == 1
     assert db.query_flat({"m": "a"}, 0, 100_000).count() == 2
+
+
+def _sink_reads():
+    """(id, read-before-any-epoch, documented schema) for every sink
+    on the shared epoch ledger. The ledger lives inside each sink's
+    path, so the path exists before the first epoch lands — an
+    existence check would try to read an empty table."""
+    from monolith_spark.streaming.bigramlm import ContinuousBigramLM
+    from monolith_spark.streaming.cms import ContinuousCMS
+    from monolith_spark.streaming.correlation import ContinuousCorrelation
+    from monolith_spark.streaming.dsir import ContinuousDSIR
+    from monolith_spark.streaming.gates import ContinuousLengthGate
+    from monolith_spark.streaming.hll import ContinuousHLL
+    from monolith_spark.streaming.kmv import ContinuousKMV
+    from monolith_spark.streaming.nbmodel import ContinuousNBModel
+    from monolith_spark.streaming.neardup import StreamingNearDupIndex
+    from monolith_spark.streaming.phashdup import StreamingImageDedupIndex
+    from monolith_spark.streaming.privacy import ContinuousKAnonymity
+    from monolith_spark.streaming.rollup import ContinuousRollup
+    from monolith_spark.streaming.winnow import StreamingWinnowIndex
+
+    def db(spark, p):
+        return MonolithDB(spark, p, chunk_size_ms=60_000)
+
+    def ingest_read(spark, p):
+        d = db(spark, p)
+        StreamingIngest(d)
+        return d.query_flat({}, 0, 10**13)
+
+    return [
+        ("cms", lambda s, p: ContinuousCMS(s, p).sketch(),
+         "d int, bucket bigint, n bigint"),
+        ("kmv", lambda s, p: ContinuousKMV(s, p).sketch(), "grp string, h bigint"),
+        ("hll", lambda s, p: ContinuousHLL(s, p, "user").read(), "n_distinct bigint"),
+        ("hll_grouped", lambda s, p: ContinuousHLL(s, p, "user", ["day"]).read(),
+         "day string, n_distinct bigint"),
+        ("privacy", lambda s, p: ContinuousKAnonymity(s, p).ledger(),
+         "event_type string, user_id bigint, n_events bigint"),
+        ("gates", lambda s, p: ContinuousLengthGate(s, p).histogram(),
+         "source string, v bigint, c bigint"),
+        ("nbmodel", lambda s, p: ContinuousNBModel(s, p).counts(),
+         "tok string, c_pos bigint, c_neg bigint"),
+        ("dsir", lambda s, p: ContinuousDSIR(s, p, "true").bucket_counts(),
+         "b bigint, t_b bigint, r_b bigint"),
+        ("bigramlm_unigrams", lambda s, p: ContinuousBigramLM(s, p).unigrams(),
+         "tok string, c1 bigint"),
+        ("bigramlm_bigrams", lambda s, p: ContinuousBigramLM(s, p).bigrams(),
+         "bg string, c2 bigint"),
+        ("correlation", lambda s, p: ContinuousCorrelation(s, p).correlations(),
+         "signature string, n_days bigint, corr double"),
+        ("correlation_lead",
+         lambda s, p: ContinuousCorrelation(s, p).leading_indicators(),
+         "signature string, best_lag bigint, n_days bigint, corr double"),
+        ("rollup", lambda s, p: ContinuousRollup(db(s, p), 60_000).read(),
+         "series_id bigint, bucket_ms bigint, sum_value double, n_points bigint, "
+         "min_value double, max_value double, avg_value double"),
+        ("winnow", lambda s, p: StreamingWinnowIndex(s, p).matches(),
+         "new_doc_id bigint, old_doc_id bigint, shared bigint, "
+         "containment double, epoch_id bigint"),
+        ("neardup", lambda s, p: StreamingNearDupIndex(s, p).matches(),
+         "new_doc_id bigint, old_doc_id bigint, jaccard double, epoch_id bigint"),
+        ("phashdup", lambda s, p: StreamingImageDedupIndex(s, p).matches(),
+         "new_media_id bigint, old_media_id bigint, hamming bigint, epoch_id bigint"),
+        ("ingest", ingest_read,
+         "series_id bigint, timestamp bigint, value double, chunk_id bigint, "
+         "signature string, labels map<string,string>"),
+    ]
+
+
+@pytest.mark.parametrize(
+    "read,schema",
+    [pytest.param(r, s, id=i) for i, r, s in _sink_reads()],
+)
+def test_sink_reads_are_empty_before_first_epoch(spark, tmp_path, read, schema):
+    got = read(spark, str(tmp_path / "sink"))
+    assert ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in got.schema
+    ) == schema
+    assert got.count() == 0
