@@ -260,8 +260,8 @@ def run_once(spark) -> dict[str, float]:
 
         # Exemplar store (round-7 eighth wave): a deterministic ~1%
         # slice of the ingested points becomes trace-id'd exemplars
-        # (write_exemplars — same dim get-or-create + chunk grid as
-        # samples, one manifest commit), then a matcher+chunk-pruned
+        # (an exemplar-only db.write — same dim get-or-create + chunk
+        # grid as samples, one manifest commit), then a matcher+chunk-pruned
         # query_exemplars read-back.
         ex = samples.filter(
             F.pmod(F.xxhash64("timestamp"), F.lit(101)) == 0
@@ -271,7 +271,7 @@ def run_once(spark) -> dict[str, float]:
                 F.lit("trace_id"), F.md5(F.col("timestamp").cast("string"))
             ).alias("exemplar_labels"),
         )
-        timed("write_exemplars", lambda: db.write_exemplars(ex))
+        timed("write_exemplars", lambda: db.write(None, exemplars=ex))
         timed("query_exemplars", lambda: _force(
             db.query_exemplars(
                 {"event_type": "purchase"}, JAN1, JAN1 + 10 * 86_400_000

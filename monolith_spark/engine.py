@@ -43,6 +43,7 @@ Snapshot isolation (manifest-as-commit):
 from __future__ import annotations
 
 import fcntl
+import functools
 import json
 import os
 import shutil
@@ -79,6 +80,26 @@ from monolith_spark.operators.timeseries import (
 DEFAULT_CHUNK_MS = 12_000 * 1000
 
 QueryMatcher = LabelMatcher
+
+# The fact tables on the shared chunk grid: each is a manifest key, a
+# directory under the db path (``<key>/chunk_id=N/``) and the schema an
+# empty read returns. Every per-table loop in MonolithDB runs over this.
+FACT_TABLES = {
+    "samples": "series_id long, timestamp long, value double, chunk_id long",
+    "exemplars": (
+        "series_id long, timestamp long, value double, "
+        "exemplar_labels map<string,string>, chunk_id long"
+    ),
+}
+
+
+def _partition_paths(base: str, col: str, parts: dict[str, list[str]]) -> list[str]:
+    """A manifest {partition value: [basenames]} map as file paths."""
+    return [
+        os.path.join(base, f"{col}={key}", fn)
+        for key, files in parts.items()
+        for fn in files
+    ]
 
 
 @dataclass
@@ -402,28 +423,9 @@ class MonolithDB:
                     m = json.load(f)
                 if i >= keep_floor or now - m.get("committed_ms", 0) <= grace_ms:
                     retained.add(name)
-                    referenced.update(
-                        os.path.join(self.series_path, fn) for fn in m["series"]
-                    )
-                    referenced.update(
-                        os.path.join(self.samples_path, f"chunk_id={cid}", fn)
-                        for cid, fl in m["samples"].items()
-                        for fn in fl
-                    )
-                    referenced.update(
-                        os.path.join(self.exemplars_path, f"chunk_id={cid}", fn)
-                        for cid, fl in m.get("exemplars", {}).items()
-                        for fn in fl
-                    )
-                    idx = m.get("label_index")
-                    if idx:
-                        referenced.update(
-                            os.path.join(self.index_path, f"kp={b}", fn)
-                            for b, fl in idx["buckets"].items()
-                            for fn in fl
-                        )
-            for base in (self.series_path, self.samples_path, self.index_path,
-                         self.exemplars_path):
+                    referenced.update(self._live_files(m))
+            for base in (self.series_path, self.index_path,
+                         *(os.path.join(self.path, t) for t in FACT_TABLES)):
                 if not os.path.isdir(base):
                     continue
                 for root, dirs, files in os.walk(base, topdown=False):
@@ -459,6 +461,19 @@ class MonolithDB:
                     except OSError:
                         continue
         return deleted
+
+    def _live_files(self, man: dict) -> list[str]:
+        """Every data file a manifest references: the dim, each fact
+        table, and the label index when one is committed."""
+        files = [os.path.join(self.series_path, fn) for fn in man["series"]]
+        for t in FACT_TABLES:
+            files += _partition_paths(
+                os.path.join(self.path, t), "chunk_id", man.get(t, {})
+            )
+        idx = man.get("label_index")
+        if idx:
+            files += _partition_paths(self.index_path, "kp", idx["buckets"])
+        return files
 
     # ------------------------------------------- metric metadata + snapshots
 
@@ -513,17 +528,17 @@ class MonolithDB:
         }
 
     def ingest_scrape(self, text: str, default_ts_ms: int | None = None) -> None:
-        """One scrape payload end-to-end: samples through the normal
-        write path (one manifest commit), OpenMetrics exemplar
-        suffixes (`` # {trace_id="..."} v ts``) into the exemplar
-        store, then the payload's ``# HELP``/``# TYPE``/``# UNIT``
-        comments into the metadata store (each stage's commit absent
-        when the payload carries nothing for it; all idempotent).
+        """One scrape payload end-to-end: samples and the OpenMetrics
+        exemplar suffixes (`` # {trace_id="..."} v ts``) through ONE
+        write commit, then the payload's ``# HELP``/``# TYPE``/``# UNIT``
+        comments into the metadata store (each commit absent when the
+        payload carries nothing for it; all idempotent).
         Sample parsing is the JVM column-expression path
         (sources/openmetrics.py); metadata lines are bounded by the
         number of metric NAMES in the payload, so the driver-side
         parse is O(names), not O(samples)."""
         from monolith_spark.sources.openmetrics import (
+            exemplar_frame,
             parse_metadata_text,
             parse_payload,
         )
@@ -532,15 +547,10 @@ class MonolithDB:
             self.spark, text, default_ts_ms=default_ts_ms, with_exemplars=True
         ).persist()
         try:
-            self.write(parsed.select("labels", "timestamp", "value"))
-            ex = parsed.filter(F.col("exemplar_value").isNotNull()).select(
-                "labels",
-                F.col("exemplar_ts").alias("timestamp"),
-                F.col("exemplar_value").alias("value"),
-                "exemplar_labels",
+            self.write(
+                parsed.select("labels", "timestamp", "value"),
+                exemplars=exemplar_frame(parsed),
             )
-            if ex.limit(1).count() > 0:
-                self.write_exemplars(ex)
         finally:
             parsed.unpersist()
         meta = parse_metadata_text(text)
@@ -580,35 +590,8 @@ class MonolithDB:
                 shutil.copy2(src, dst)
 
         try:
-            for fn in man["series"]:
-                link(
-                    os.path.join(self.series_path, fn),
-                    os.path.join(staging, "series", fn),
-                )
-            for cid, files in man["samples"].items():
-                for fn in files:
-                    link(
-                        os.path.join(self.samples_path, f"chunk_id={cid}", fn),
-                        os.path.join(staging, "samples", f"chunk_id={cid}", fn),
-                    )
-            for cid, files in man.get("exemplars", {}).items():
-                for fn in files:
-                    link(
-                        os.path.join(self.exemplars_path, f"chunk_id={cid}", fn),
-                        os.path.join(staging, "exemplars", f"chunk_id={cid}", fn),
-                    )
-            idx = man.get("label_index")
-            if idx:
-                for b, files in idx["buckets"].items():
-                    for fn in files:
-                        link(
-                            os.path.join(self.index_path, f"kp={b}", fn),
-                            os.path.join(staging, "label_index", f"kp={b}", fn),
-                        )
-            link(
-                os.path.join(self.path, "metadata.json"),
-                os.path.join(staging, "metadata.json"),
-            )
+            for src in [*self._live_files(man), os.path.join(self.path, "metadata.json")]:
+                link(src, os.path.join(staging, os.path.relpath(src, self.path)))
             # a one-version manifest: the snapshot needs no history
             mdir = os.path.join(staging, "_manifest")
             os.makedirs(mdir, exist_ok=True)
@@ -627,11 +610,16 @@ class MonolithDB:
 
     def write(
         self,
-        df: DataFrame,
+        df: DataFrame | None,
         window: tuple[int, int] | None = None,
         return_count: bool = False,
-    ) -> int | None:
-        """Ingest a batch of [labels, timestamp, value] rows.
+        exemplars: DataFrame | None = None,
+    ) -> dict[str, int] | None:
+        """Ingest a batch of [labels, timestamp, value] rows and, with
+        ``exemplars``, [labels (series labels), timestamp, value,
+        exemplar_labels] rows — the trace-id'd sample references
+        remote-write 1.0/2.0 carry alongside samples. ``df`` may be
+        None for an exemplar-only batch.
 
         The reference's write path (/root/reference/src/db.rs:176-194 →
         chunk.rs:110-137): range/zero filter (F1) → get-or-create series
@@ -640,30 +628,44 @@ class MonolithDB:
         commit — dim and fact rows of a batch appear atomically, and an
         all-invalid batch (e.g. every ts==0; the reference errors
         per-point, we drop set-at-a-time) moves zero files and commits
-        nothing, so no footer-less dirs and no emptiness probe.
+        nothing, so no footer-less dirs and no emptiness probe. Both
+        fact tables pass the same filter and ``window``, share one dim
+        get-or-create (exemplars may reference series never written as
+        samples; content-hash ids keep it idempotent) and land on the
+        same chunk grid, so query pruning is one predicate.
 
-        With ``return_count=True``, returns how many sample rows
-        survived the validity filter and were actually ingested (the
-        remote-write 2.0 ``-Samples-Written`` header must report the
-        receiver's truth, not the request's claim) — one extra count
-        job against the already-persisted batch, so opt-in to keep the
-        bulk-ingest path at its usual job count.
+        With ``return_count=True``, returns {table: rows that survived
+        the validity filter and were actually ingested} for every fact
+        table (0 for a frame not given) — the remote-write 2.0
+        ``-Written`` headers must report the receiver's truth, not the
+        request's claim. One extra count job per given frame against
+        the already-persisted batch, so opt-in to keep the bulk-ingest
+        path at its usual job count.
         """
-        df = valid_points(df, window=window)
-        df = df.withColumn("signature", signature_expr("labels")).withColumn(
-            "series_id", F.xxhash64(F.col("signature"))
-        )
-        df = df.withColumn(
-            "chunk_id", F.floor(F.col("timestamp") / F.lit(self.chunk_size_ms)).cast("long")
-        )
-        df.persist()
-        n_written: int | None = None
+        if df is None and exemplars is None:
+            raise ValueError("write needs samples, exemplars, or both")
+        staged: dict[str, DataFrame] = {}
+        for t, f in (("samples", df), ("exemplars", exemplars)):
+            if f is None:
+                continue
+            f = valid_points(f, window=window)
+            f = f.withColumn("signature", signature_expr("labels")).withColumn(
+                "series_id", F.xxhash64(F.col("signature"))
+            )
+            f = f.withColumn(
+                "chunk_id", F.floor(F.col("timestamp") / F.lit(self.chunk_size_ms)).cast("long")
+            )
+            staged[t] = f.persist()
+        counts: dict[str, int] | None = None
         try:
             if return_count:
-                n_written = df.count()
+                counts = {t: staged[t].count() if t in staged else 0 for t in FACT_TABLES}
             # J5 get-or-create as a left_anti against the existing dim —
             # content-hash ids make this idempotent (no critical section).
-            new_series = df.select("series_id", "signature", "labels").dropDuplicates(["series_id"])
+            new_series = functools.reduce(
+                DataFrame.unionByName,
+                [f.select("series_id", "signature", "labels") for f in staged.values()],
+            ).dropDuplicates(["series_id"])
             existing = self._series_raw()
             if existing is not None:
                 # Same size gate as the query path: force-broadcasting
@@ -702,16 +704,11 @@ class MonolithDB:
                         options=self._INDEX_WRITE_OPTS,
                     )
                     post_stats = self._posting_stats_from_moved(post_files)
-            # Time-sorted within partitions → Parquet row-group min/max
-            # stats implement F3's binary search.
-            fact_files = self._stage_and_move(
-                df.select("series_id", "timestamp", "value", "chunk_id")
-                .repartition("chunk_id")
-                .sortWithinPartitions("series_id", "timestamp"),
-                self.samples_path,
-                partition_by="chunk_id",
-            )
-            if dim_files or fact_files:
+            fact_files = {}
+            for t, f in staged.items():
+                cols = [c.split()[0] for c in FACT_TABLES[t].split(", ")]
+                fact_files[t] = self._stage_chunks(f.select(*cols), t)
+            if dim_files or any(fact_files.values()):
 
                 def add(man: dict) -> None:
                     # Index freshness decided on the LOCKED manifest,
@@ -724,10 +721,10 @@ class MonolithDB:
                         post_files and idx and idx["series"] == man["series"]
                     )
                     man["series"] = sorted(set(man["series"]) | set(dim_files))
-                    for cid, files in fact_files.items():
-                        man["samples"][cid] = sorted(
-                            set(man["samples"].get(cid, [])) | set(files)
-                        )
+                    for t, moved in fact_files.items():
+                        for cid, files in moved.items():
+                            chunks = man.setdefault(t, {})
+                            chunks[cid] = sorted(set(chunks.get(cid, [])) | set(files))
                     if extend_idx:
                         for b, files in post_files.items():
                             idx["buckets"][b] = sorted(
@@ -754,99 +751,22 @@ class MonolithDB:
 
                 self._commit(add, op="write")
         finally:
-            df.unpersist()
-        return n_written
+            for f in staged.values():
+                f.unpersist()
+        return counts
+
+    def _stage_chunks(self, df: DataFrame, table: str) -> dict[str, list[str]]:
+        """Stage fact rows into ``table``'s chunk partitions, sorted by
+        (series_id, timestamp) within each — Parquet row-group min/max
+        stats then implement F3's binary search. Returns
+        {chunk_id: [basenames]}."""
+        return self._stage_and_move(
+            df.repartition("chunk_id").sortWithinPartitions("series_id", "timestamp"),
+            os.path.join(self.path, table),
+            partition_by="chunk_id",
+        )
 
     # -------------------------------------------------------------- exemplars
-
-    def write_exemplars(
-        self, df: DataFrame, return_count: bool = False
-    ) -> int | None:
-        """Ingest exemplars — [labels (series labels), timestamp,
-        value, exemplar_labels] rows, the trace-id'd sample references
-        remote-write 1.0/2.0 carry alongside samples. Same set-at-a-time
-        shape as write(): ts!=0 filter → dim get-or-create (exemplars
-        may reference series never written as samples; content-hash ids
-        keep it idempotent) → fact append into ``exemplars/chunk_id=N``
-        partitions (the SAME chunk grid as samples, so query pruning is
-        one predicate) — visible through ONE manifest commit. A batch
-        whose series are all known touches no dim file, so the posting
-        index stays fresh through steady-state exemplar ingest; a batch
-        that DOES create series drops a stale index like any other dim
-        change (readers fall back to the dim scan until the next
-        build)."""
-        df = valid_points(df)
-        df = df.withColumn("signature", signature_expr("labels")).withColumn(
-            "series_id", F.xxhash64(F.col("signature"))
-        )
-        df = df.withColumn(
-            "chunk_id",
-            F.floor(F.col("timestamp") / F.lit(self.chunk_size_ms)).cast("long"),
-        )
-        df.persist()
-        n_written: int | None = None
-        try:
-            if return_count:
-                n_written = df.count()
-            new_series = df.select(
-                "series_id", "signature", "labels"
-            ).dropDuplicates(["series_id"])
-            existing = self._series_raw()
-            if existing is not None:
-                new_series = new_series.join(
-                    self._dim_hint(existing.select("series_id")),
-                    "series_id",
-                    "left_anti",
-                )
-            dim_files = self._stage_and_move(
-                new_series.sortWithinPartitions("series_id"),
-                self.series_path,
-                options=self._DIM_WRITE_OPTS,
-            )
-            fact_files = self._stage_and_move(
-                df.select(
-                    "series_id", "timestamp", "value", "exemplar_labels",
-                    "chunk_id",
-                )
-                .repartition("chunk_id")
-                .sortWithinPartitions("series_id", "timestamp"),
-                self.exemplars_path,
-                partition_by="chunk_id",
-            )
-            if dim_files or fact_files:
-
-                def add(man: dict) -> None:
-                    man["series"] = sorted(set(man["series"]) | set(dim_files))
-                    ex = man.setdefault("exemplars", {})
-                    for cid, files in fact_files.items():
-                        ex[cid] = sorted(set(ex.get(cid, [])) | set(files))
-                    idx = man.get("label_index")
-                    if idx is not None and idx["series"] != man["series"]:
-                        del man["label_index"]
-
-                self._commit(add, op="write-exemplars")
-        finally:
-            df.unpersist()
-        return n_written
-
-    def exemplars(self, at_version: int | None = None) -> DataFrame:
-        """The exemplars fact table at a snapshot — explicit file-list
-        read with basePath, exactly like samples()."""
-        man = self._load_manifest(at_version)
-        paths = [
-            os.path.join(self.exemplars_path, f"chunk_id={cid}", fn)
-            for cid, files in man.get("exemplars", {}).items()
-            for fn in files
-        ]
-        if not paths:
-            return self.spark.createDataFrame(
-                [],
-                "series_id long, timestamp long, value double, "
-                "exemplar_labels map<string,string>, chunk_id long",
-            )
-        return self.spark.read.option("basePath", self.exemplars_path).parquet(
-            *paths
-        )
 
     def query_exemplars(
         self, matchers, start_ms: int, end_ms: int, at_version: int | None = None
@@ -942,25 +862,27 @@ class MonolithDB:
                     if os.path.exists(src) and not os.path.isdir(part):
                         raise
 
-    def samples(self, at_version: int | None = None) -> DataFrame:
-        """The samples fact table at the current — or, with
-        ``at_version``, any retained historical — snapshot: an explicit
-        file-list read (with basePath, so chunk_id stays a partition
-        column and PartitionFilters prune exactly as with directory
-        discovery) — the plan is pinned to the manifest resolved here."""
-        man = self._load_manifest(at_version)
-        paths = [
-            os.path.join(self.samples_path, f"chunk_id={cid}", fn)
-            for cid, files in man["samples"].items()
-            for fn in files
-        ]
-        if not paths:
-            return self.spark.createDataFrame(
-                [], "series_id long, timestamp long, value double, chunk_id long"
-            )
-        return self.spark.read.option("basePath", self.samples_path).parquet(
-            *paths
+    def _fact(self, table: str, at_version: int | None = None) -> DataFrame:
+        """A fact table at the current — or, with ``at_version``, any
+        retained historical — snapshot: an explicit file-list read
+        (with basePath, so chunk_id stays a partition column and
+        PartitionFilters prune exactly as with directory discovery) —
+        the plan is pinned to the manifest resolved here."""
+        base = os.path.join(self.path, table)
+        paths = _partition_paths(
+            base, "chunk_id", self._load_manifest(at_version).get(table, {})
         )
+        if not paths:
+            return self.spark.createDataFrame([], FACT_TABLES[table])
+        return self.spark.read.option("basePath", base).parquet(*paths)
+
+    def samples(self, at_version: int | None = None) -> DataFrame:
+        """The samples fact table at a snapshot (see _fact)."""
+        return self._fact("samples", at_version)
+
+    def exemplars(self, at_version: int | None = None) -> DataFrame:
+        """The exemplars fact table at a snapshot (see _fact)."""
+        return self._fact("exemplars", at_version)
 
     def _query_samples(
         self, start_ms: int, end_ms: int, at_version: int | None = None
@@ -1313,8 +1235,10 @@ class MonolithDB:
         chunk_id: int,
         target_bytes: int = 128 * 1024 * 1024,
         layout: str = "series",
+        table: str = "samples",
     ) -> bool:
-        """Rewrite one sealed chunk partition: merge the small files
+        """Rewrite one sealed chunk partition of a fact table (``table``
+        names it: samples or exemplars): merge the small files
         micro-batch appends accumulate into ~target_bytes files sorted
         by (series_id, timestamp) (``layout="series"``) or clustered
         along the Morton curve over (series_id, timestamp)
@@ -1340,11 +1264,10 @@ class MonolithDB:
         Returns False if the chunk has no live files.
         """
         key = str(chunk_id)
-        man = self._load_manifest()
-        live = man["samples"].get(key)
+        live = self._load_manifest().get(table, {}).get(key)
         if not live:
             return False
-        part = os.path.join(self.samples_path, f"chunk_id={chunk_id}")
+        part = os.path.join(self.path, table, f"chunk_id={chunk_id}")
         paths = [os.path.join(part, fn) for fn in live]
         in_bytes = sum(os.path.getsize(p) for p in paths)
         n_files = max(1, -(-in_bytes // target_bytes))
@@ -1362,40 +1285,9 @@ class MonolithDB:
         new_files = self._stage_and_move(laid_out, part)
 
         def swap(m: dict) -> None:
-            m["samples"][key] = new_files
+            m.setdefault(table, {})[key] = new_files
 
         self._commit(swap, op="compact")
-        return True
-
-    def compact_exemplar_chunk(
-        self, chunk_id: int, target_bytes: int = 128 * 1024 * 1024
-    ) -> bool:
-        """compact_chunk's exemplar twin: a streaming scrape with
-        exemplars appends one small file per micro-batch per exemplar
-        chunk, exactly the accumulation the sample path compacts away
-        — without this the exemplar store is the one table whose file
-        count grows unboundedly. Same manifest-swap shape; old files
-        reclaimed by vacuum."""
-        key = str(chunk_id)
-        man = self._load_manifest()
-        live = man.get("exemplars", {}).get(key)
-        if not live:
-            return False
-        part = os.path.join(self.exemplars_path, f"chunk_id={chunk_id}")
-        paths = [os.path.join(part, fn) for fn in live]
-        in_bytes = sum(os.path.getsize(p) for p in paths)
-        n_files = max(1, -(-in_bytes // target_bytes))
-        laid_out = (
-            self.spark.read.parquet(*paths)
-            .repartition(n_files, "series_id")
-            .sortWithinPartitions("series_id", "timestamp")
-        )
-        new_files = self._stage_and_move(laid_out, part)
-
-        def swap(m: dict) -> None:
-            m.setdefault("exemplars", {})[key] = new_files
-
-        self._commit(swap, op="compact-exemplars")
         return True
 
     def compact(
@@ -1404,8 +1296,10 @@ class MonolithDB:
         layout: str = "series",
         rebuild_index: bool = True,
     ) -> int:
-        """Compact every chunk partition (optionally excluding e.g. the
-        chunk currently receiving appends). Returns chunks rewritten.
+        """Compact every chunk partition of every fact table (optionally
+        excluding e.g. the chunk currently receiving appends) — a
+        streaming scrape with exemplars appends one small file per
+        micro-batch per exemplar chunk too. Returns chunks rewritten.
 
         Also compacts the inverted label index when one exists:
         incremental maintenance appends one posting file per ingest
@@ -1416,16 +1310,12 @@ class MonolithDB:
         exclude = exclude_chunk_ids or set()
         done = 0
         man0 = self._load_manifest()
-        for key in sorted(man0["samples"], key=int):
-            cid = int(key)
-            if cid in exclude:
-                continue
-            done += int(self.compact_chunk(cid, layout=layout))
-        for key in sorted(man0.get("exemplars", {}), key=int):
-            cid = int(key)
-            if cid in exclude:
-                continue
-            done += int(self.compact_exemplar_chunk(cid))
+        for table in FACT_TABLES:
+            for key in sorted(man0.get(table, {}), key=int):
+                cid = int(key)
+                if cid in exclude:
+                    continue
+                done += int(self.compact_chunk(cid, layout=layout, table=table))
         idx = self._load_manifest().get("label_index")
         if rebuild_index and idx is not None:
             self.build_label_index(idx["n_buckets"])
@@ -1476,12 +1366,13 @@ class MonolithDB:
             .distinct()
         )
 
-    def _expired_chunks(self, cutoff_ms: int) -> list[str]:
-        """Manifest keys of chunks whose range ends before cutoff_ms."""
+    def _expired_chunks(self, cutoff_ms: int, table: str = "samples") -> list[str]:
+        """Manifest keys of ``table``'s chunks whose range ends before
+        cutoff_ms."""
         return sorted(
             (
                 key
-                for key in self._load_manifest()["samples"]
+                for key in self._load_manifest().get(table, {})
                 if (int(key) + 1) * self.chunk_size_ms - 1 < cutoff_ms
             ),
             key=int,
@@ -1499,30 +1390,20 @@ class MonolithDB:
         commit that only expired exemplar chunks reports their count
         rather than a misleading 0.
         """
-        expired = self._expired_chunks(cutoff_ms)
-        man = self._load_manifest()
-        expired_ex = [
-            key
-            for key in man.get("exemplars", {})
-            if (int(key) + 1) * self.chunk_size_ms - 1 < cutoff_ms
-        ]
-        if not expired and not expired_ex:
+        # exemplars live on the same chunk grid — a retained exemplar
+        # whose samples expired would serve trace references into data
+        # that no longer exists
+        expired = {t: self._expired_chunks(cutoff_ms, t) for t in FACT_TABLES}
+        if not any(expired.values()):
             return 0
 
         def drop(m: dict) -> None:
-            for key in expired:
-                m["samples"].pop(key, None)
-            ex = m.get("exemplars")
-            if ex:
-                # exemplars live on the same chunk grid — a retained
-                # exemplar whose samples expired would serve trace
-                # references into data that no longer exists
-                for key in list(ex):
-                    if (int(key) + 1) * self.chunk_size_ms - 1 < cutoff_ms:
-                        ex.pop(key, None)
+            for t, keys in expired.items():
+                for key in keys:
+                    m[t].pop(key, None)
 
         self._commit(drop, op="retention-drop")
-        return len({int(k) for k in expired} | {int(k) for k in expired_ex})
+        return len({int(k) for keys in expired.values() for k in keys})
 
     def _rollup(
         self, raw: DataFrame, step_ms: int, extra_keys: tuple[str, ...] = ()
@@ -1747,31 +1628,17 @@ class MonolithDB:
             n = sel.count()
             if n == 0:
                 return 0
+            man = self._load_manifest()
             if not bounded:
-                kept = self.samples().join(
-                    self._dim_hint(sel), "series_id", "left_anti"
-                )
-                fact_files = self._stage_and_move(
-                    kept.repartition("chunk_id").sortWithinPartitions(
-                        "series_id", "timestamp"
-                    ),
-                    self.samples_path,
-                    partition_by="chunk_id",
-                )
                 # the deleted identity's exemplars go with it (GDPR:
                 # exemplar labels carry trace ids tied to the series)
-                ex_files: dict[str, list[str]] | None = None
-                if self._load_manifest().get("exemplars"):
-                    kept_ex = self.exemplars().join(
-                        self._dim_hint(sel), "series_id", "left_anti"
+                fact_files = {
+                    t: self._stage_chunks(
+                        self._fact(t).join(self._dim_hint(sel), "series_id", "left_anti"), t
                     )
-                    ex_files = self._stage_and_move(
-                        kept_ex.repartition("chunk_id").sortWithinPartitions(
-                            "series_id", "timestamp"
-                        ),
-                        self.exemplars_path,
-                        partition_by="chunk_id",
-                    )
+                    for t in FACT_TABLES
+                    if man.get(t)
+                }
                 kept_dim = self.series().join(sel, "series_id", "left_anti")
                 dim_files = self._stage_and_move(
                     kept_dim.sortWithinPartitions("series_id"),
@@ -1801,10 +1668,8 @@ class MonolithDB:
                 def swap(m: dict) -> None:
                     idx = m.get("label_index")
                     refresh = post_files and idx and idx["series"] == m["series"]
-                    m["samples"] = fact_files
+                    m.update(fact_files)
                     m["series"] = dim_files
-                    if ex_files is not None:
-                        m["exemplars"] = ex_files
                     if refresh:
                         idx["buckets"] = post_files
                         idx["key_stats"] = post_stats
@@ -1816,25 +1681,26 @@ class MonolithDB:
 
                 self._commit(swap, op="delete")
                 return n
-            man = self._load_manifest()
-
-            def _overlapping(chunks: dict) -> list[str]:
-                return [
+            overlapping = {
+                t: [
                     k
-                    for k in chunks
+                    for k in man.get(t, {})
                     if int(k) * self.chunk_size_ms <= hi
                     and (int(k) + 1) * self.chunk_size_ms - 1 >= lo
                 ]
-
-            overlapping = _overlapping(man["samples"])
-            ex_overlapping = _overlapping(man.get("exemplars", {}))
-            if not overlapping and not ex_overlapping:
+                for t in FACT_TABLES
+            }
+            if not any(overlapping.values()):
                 return n
             marked = self._dim_hint(sel).withColumn("__m", F.lit(True))
-
-            def _kept(src):
-                return (
-                    src.join(marked, "series_id", "left")
+            fact_files = {}
+            for t, keys in overlapping.items():
+                if not keys:
+                    continue
+                kept = (
+                    self._fact(t)
+                    .filter(F.col("chunk_id").isin([int(k) for k in keys]))
+                    .join(marked, "series_id", "left")
                     .filter(
                         ~(
                             F.coalesce(F.col("__m"), F.lit(False))
@@ -1843,44 +1709,14 @@ class MonolithDB:
                     )
                     .drop("__m")
                 )
-
-            fact_files: dict[str, list[str]] = {}
-            if overlapping:
-                src = self.samples().filter(
-                    F.col("chunk_id").isin([int(k) for k in overlapping])
-                )
-                fact_files = self._stage_and_move(
-                    _kept(src).repartition("chunk_id").sortWithinPartitions(
-                        "series_id", "timestamp"
-                    ),
-                    self.samples_path,
-                    partition_by="chunk_id",
-                )
-            ex_fact_files: dict[str, list[str]] = {}
-            if ex_overlapping:
-                ex_src = self.exemplars().filter(
-                    F.col("chunk_id").isin([int(k) for k in ex_overlapping])
-                )
-                ex_fact_files = self._stage_and_move(
-                    _kept(ex_src).repartition("chunk_id").sortWithinPartitions(
-                        "series_id", "timestamp"
-                    ),
-                    self.exemplars_path,
-                    partition_by="chunk_id",
-                )
+                fact_files[t] = self._stage_chunks(kept, t)
 
             def swap_bounded(m: dict) -> None:
-                for k in overlapping:
-                    m["samples"].pop(k, None)
-                for k, files in fact_files.items():
-                    m["samples"][k] = files
-                ex = m.setdefault("exemplars", {})
-                for k in ex_overlapping:
-                    ex.pop(k, None)
-                for k, files in ex_fact_files.items():
-                    ex[k] = files
-                if not ex:
-                    m.pop("exemplars", None)
+                for t, moved in fact_files.items():
+                    chunks = m.setdefault(t, {})
+                    for k in overlapping[t]:
+                        chunks.pop(k, None)
+                    chunks.update(moved)
 
             self._commit(swap_bounded, op="delete")
             return n

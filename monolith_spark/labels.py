@@ -58,6 +58,11 @@ def _escape(col: Column) -> Column:
     return F.replace(col, F.lit("="), F.lit("\\="))
 
 
+def _escape_str(s: str) -> str:
+    # Driver-side twin of _escape, same order
+    return s.replace("\\", "\\\\").replace(",", "\\,").replace("=", "\\=")
+
+
 def sql_str_lit(s: str) -> str:
     """A Spark-SQL single-quoted string literal for ``s`` (backslash
     escaping — the default parser mode get_spark runs under)."""
@@ -121,10 +126,7 @@ def signature_sql(pairs: list[tuple[str, str]], dialect: str = "duckdb") -> str:
         out = f"replace({out}, ',', '\\,')"
         return f"replace({out}, '=', '\\=')"
 
-    def esc_lit(k: str) -> str:
-        return k.replace("\\", "\\\\").replace(",", "\\,").replace("=", "\\=")
-
-    parts = [f"'{esc_lit(k)}=' || {esc_sql(v)}" for k, v in sorted(pairs)]
+    parts = [f"'{_escape_str(k)}=' || {esc_sql(v)}" for k, v in sorted(pairs)]
     return " || ',' || ".join(parts)
 
 
@@ -206,21 +208,14 @@ def matcher_predicate(labels: Column | str, matchers: list["LabelMatcher"]) -> C
 def exact_signature_predicate(labels: Column | str, full_labels: dict[str, str]) -> Column:
     """J5 exact label-set lookup: the whole (sorted, escaped) signature
     must equal the query's (/root/reference/src/indexer/sled_indexer.rs:98-107)."""
-
-    def esc(s: str) -> str:
-        return s.replace("\\", "\\\\").replace(",", "\\,").replace("=", "\\=")
-
-    sig = ",".join(f"{esc(k)}={esc(v)}" for k, v in sorted(full_labels.items()))
-    return signature_expr(labels) == F.lit(sig)
+    return signature_expr(labels) == F.lit(python_signature(full_labels))
 
 
 def python_signature(labels: dict[str, str]) -> str:
     """Driver-side twin of signature_expr, for tests and point lookups."""
-
-    def esc(s: str) -> str:
-        return s.replace("\\", "\\\\").replace(",", "\\,").replace("=", "\\=")
-
-    return ",".join(f"{esc(k)}={esc(v)}" for k, v in sorted(labels.items()))
+    return ",".join(
+        f"{_escape_str(k)}={_escape_str(v)}" for k, v in sorted(labels.items())
+    )
 
 
 def regex_literal_set(pattern: str, cap: int = 64) -> set[str] | None:

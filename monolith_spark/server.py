@@ -39,9 +39,10 @@ def write_request_to_df(spark, req: proto.WriteRequest):
 
 
 def exemplars_request_to_df(spark, req: proto.WriteRequest):
-    """The request's exemplars as a write_exemplars-shaped DataFrame
-    ([series labels, timestamp, value, exemplar_labels]), or None when
-    the request carries none."""
+    """The request's exemplars as the DataFrame
+    ``MonolithDB.write(..., exemplars=)`` takes ([series labels,
+    timestamp, value, exemplar_labels]), or None when the request
+    carries none."""
     rows = [
         (ts.labels, e.timestamp, e.value, e.labels)
         for ts in req.timeseries
@@ -1092,25 +1093,20 @@ class MonolithServer:
                             # receiver's truth (rows that survived
                             # valid_points and were ingested), not the
                             # request's claimed counts
-                            n_samples = server.db.write(
+                            n = server.db.write(
                                 write_request_to_df(server.db.spark, req),
                                 return_count=True,
+                                exemplars=exemplars_request_to_df(
+                                    server.db.spark, req
+                                ),
                             )
-                            edf = exemplars_request_to_df(
-                                server.db.spark, req
-                            )
-                            n_ex = 0
-                            if edf is not None:
-                                n_ex = server.db.write_exemplars(
-                                    edf, return_count=True
-                                )
                             if meta:
                                 server.db.set_metric_metadata(meta)
                             # remote-write 2.0: success is 204 No Content
                             self.send_response(204)
                             self.send_header(
                                 "X-Prometheus-Remote-Write-Samples-Written",
-                                str(n_samples),
+                                str(n["samples"]),
                             )
                             self.send_header(
                                 "X-Prometheus-Remote-Write-Histograms-Written",
@@ -1118,16 +1114,19 @@ class MonolithServer:
                             )
                             self.send_header(
                                 "X-Prometheus-Remote-Write-Exemplars-Written",
-                                str(n_ex),
+                                str(n["exemplars"]),
                             )
                             self.send_header("Content-Length", "0")
                             self.end_headers()
                             return
                         req = proto.decode_write_request(raw)
-                        server.db.write(write_request_to_df(server.db.spark, req))
-                        edf = exemplars_request_to_df(server.db.spark, req)
-                        if edf is not None:
-                            server.db.write_exemplars(edf)
+                        # samples and exemplars land in ONE commit
+                        server.db.write(
+                            write_request_to_df(server.db.spark, req),
+                            exemplars=exemplars_request_to_df(
+                                server.db.spark, req
+                            ),
+                        )
                         payload = b""
                     else:
                         rreq = proto.decode_read_request(raw)

@@ -172,7 +172,8 @@ def parse_lines(
     ``with_exemplars`` adds the OpenMetrics exemplar suffix columns —
     [exemplar_labels, exemplar_value, exemplar_ts] (NULLs when the
     line carries none; an exemplar without its own stamp takes the
-    sample's) — for feeding db.write_exemplars off a scrape."""
+    sample's) — exemplar_frame turns them into the frame
+    ``db.write(..., exemplars=)`` takes."""
     l = F.trim(F.col(line_col))
     carry = [F.col(default_ts_col).alias("__dts")] if default_ts_col else []
     body = lines.select(l.alias("__l"), *carry).filter(
@@ -252,7 +253,7 @@ def scrape_stream(
     expressions as the batch path, so batch parse_payload results are
     the streaming oracle by construction. ``with_exemplars`` carries
     the OpenMetrics exemplar suffix columns through — StreamingIngest
-    routes them into the exemplar store per micro-batch."""
+    writes them with the samples, one commit per micro-batch."""
     lines = spark.readStream.text(scrape_dir).select(
         F.col("value").alias("line"),
         F.unix_millis(F.col("_metadata.file_modification_time")).alias(
@@ -313,4 +314,16 @@ def parse_payload(
     )
     return parse_lines(
         lines, default_ts_ms=default_ts_ms, with_exemplars=with_exemplars
+    )
+
+
+def exemplar_frame(parsed: DataFrame) -> DataFrame:
+    """Rows parsed ``with_exemplars`` → the exemplars of the lines
+    that carry one, as [labels, timestamp, value, exemplar_labels] —
+    the frame ``MonolithDB.write(..., exemplars=)`` takes."""
+    return parsed.filter(F.col("exemplar_value").isNotNull()).select(
+        "labels",
+        F.col("exemplar_ts").alias("timestamp"),
+        F.col("exemplar_value").alias("value"),
+        "exemplar_labels",
     )

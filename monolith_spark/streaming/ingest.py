@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from monolith_spark.engine import MonolithDB
+from monolith_spark.sources.openmetrics import exemplar_frame
 from monolith_spark.streaming.ledger import EpochSink
 
 
@@ -68,29 +69,16 @@ class StreamingIngest(EpochSink):
             cutoff = self.high_watermark_ms - self.allowed_lateness_ms
             window = (cutoff, 2**62)
         # an exemplar-bearing stream (scrape_stream with_exemplars)
-        # routes the suffix columns into the exemplar store; both
-        # writes sit inside the same epoch-ledger guard
+        # writes its suffix columns with the samples: one commit per
+        # epoch, so a replay never finds half an epoch applied
         has_ex = {"exemplar_labels", "exemplar_value", "exemplar_ts"} <= set(
             batch_df.columns
         )
         self.db.write(
-            batch_df.select("labels", "timestamp", "value"), window=window
+            batch_df.select("labels", "timestamp", "value"),
+            window=window,
+            exemplars=exemplar_frame(batch_df) if has_ex else None,
         )
-        if has_ex:
-            from pyspark.sql import functions as F
-
-            ex = batch_df.filter(F.col("exemplar_value").isNotNull()).select(
-                "labels",
-                F.col("exemplar_ts").alias("timestamp"),
-                F.col("exemplar_value").alias("value"),
-                "exemplar_labels",
-            )
-            if window is not None:
-                ex = ex.filter(
-                    F.col("timestamp").between(window[0], window[1])
-                )
-            if ex.limit(1).count() > 0:
-                self.db.write_exemplars(ex)
 
     def start(
         self,

@@ -193,8 +193,8 @@ def ts_exemplar_query_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     serves them): a deterministic ~1/23 slice of the events becomes
     exemplars (trace_id = md5 prefix of the series|timestamp key, so
     both engines derive identical ids), ingested through
-    db.write_exemplars into chunk_id partitions on the SAME grid as
-    samples, then queried back matcher-pruned + chunk-pruned via
+    db.write(..., exemplars=) into chunk_id partitions on the SAME grid
+    as samples, then queried back matcher-pruned + chunk-pruned via
     query_exemplars. The oracle replays the slice and the trace
     derivation straight off the raw events — a lost, duplicated, or
     mis-pruned exemplar hash-fails."""
@@ -208,16 +208,16 @@ def ts_exemplar_query_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = F.concat(
         F.col("signature"), F.lit("|"), F.col("timestamp").cast("string")
     )
-    db.write(s.select("labels", "timestamp", "value"))
-    db.write_exemplars(
-        s.filter(_text.hash60_expr(key) % 23 == 0).select(
+    db.write(
+        s.select("labels", "timestamp", "value"),
+        exemplars=s.filter(_text.hash60_expr(key) % 23 == 0).select(
             "labels",
             "timestamp",
             "value",
             F.create_map(
                 F.lit("trace_id"), F.substring(F.md5(key), 1, 16)
             ).alias("exemplar_labels"),
-        )
+        ),
     )
     return db.query_exemplars({"event_type": "purchase"}, JAN8, JAN15).select(
         "signature",

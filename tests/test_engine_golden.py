@@ -1150,7 +1150,7 @@ def test_exemplars_follow_retention_and_delete(spark, tmp_path):
         ({"j": "a"}, 21_000, 3.0, {"trace_id": "t3"}),
         ({"j": "b"}, 2_000, 9.0, {"trace_id": "t9"}),
     ]
-    db.write_exemplars(spark.createDataFrame(
+    db.write(None, exemplars=spark.createDataFrame(
         ex_rows,
         "labels map<string,string>, timestamp long, value double, "
         "exemplar_labels map<string,string>"))
@@ -1193,7 +1193,7 @@ def test_compact_exemplar_chunk_merges_files_preserves_results(
     schema = ("labels map<string,string>, timestamp long, value double, "
               "exemplar_labels map<string,string>")
     for i in range(3):
-        db.write_exemplars(spark.createDataFrame(
+        db.write(None, exemplars=spark.createDataFrame(
             [({"m": "a"}, 1_000 + i, float(i), {"trace_id": f"t{i}"})],
             schema))
     files_before = db._load_manifest()["exemplars"]["0"]
@@ -1216,4 +1216,42 @@ def test_compact_exemplar_chunk_merges_files_preserves_results(
         for r in db.query_exemplars({"m": "a"}, 0, 100_000).collect()
     )
     assert after == before
-    assert db.compact_exemplar_chunk(99) is False
+    assert db.compact_chunk(99, table="exemplars") is False
+
+
+def test_write_job_counts_pinned(spark, tmp_path):
+    """Spark job counts are deterministic, so the write plan is pinned.
+    A samples-only write into an indexed db launches 15 jobs. A write
+    that carries exemplars shares the dim get-or-create, the posting
+    pass and the commit with its samples, so it launches fewer jobs
+    than the 22 a samples write followed by a separate exemplar write
+    took."""
+    from monolith_spark.labels import SAMPLES_SCHEMA
+
+    db = MonolithDB(spark, str(tmp_path / "db"), chunk_size_ms=60_000)
+    db.write(spark.createDataFrame(
+        [({"job": "api", "i": str(i)}, 1_000 + i, float(i)) for i in range(20)],
+        SAMPLES_SCHEMA))
+    db.build_label_index()
+    samples_only = spark.createDataFrame(
+        [({"job": "api", "i": str(i)}, 2_000 + i, 1.0) for i in range(15, 25)],
+        SAMPLES_SCHEMA)
+    samples = spark.createDataFrame(
+        [({"job": "web", "i": str(i)}, 3_000 + i, 2.0) for i in range(10)],
+        SAMPLES_SCHEMA)
+    exemplars = spark.createDataFrame(
+        [({"job": "web", "i": str(i)}, 3_000 + i, 2.5, {"trace_id": f"t{i}"})
+         for i in range(11)],
+        "labels map<string,string>, timestamp long, value double, "
+        "exemplar_labels map<string,string>")
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("write_samples", "write job-count probe")
+        db.write(samples_only)
+        sc.setJobGroup("write_both", "write job-count probe")
+        db.write(samples, exemplars=exemplars)
+    finally:
+        sc.setJobGroup("", "")
+    st = sc.statusTracker()
+    assert len(st.getJobIdsForGroup("write_samples")) == 15
+    assert len(st.getJobIdsForGroup("write_both")) < 22

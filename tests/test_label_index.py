@@ -376,3 +376,22 @@ def test_stats_driven_probe_planning(spark, tmp_path):
     db.delete_series({"job": "j1"})
     ks3 = db._load_manifest()["label_index"]["key_stats"]
     assert "job" in ks3 and ks3["job"][1] == 4  # j1 gone → 4 job values
+
+
+def test_exemplar_write_keeps_index_fresh(spark, tmp_path):
+    # An exemplar may name a series that has no samples. Its write
+    # creates that series, and the shared write path extends the fresh
+    # index with its postings instead of dropping the index.
+    db = _mk_db(spark, tmp_path)
+    db.build_label_index()
+    ex = spark.createDataFrame(
+        [({"job": "trace-only", "inst": "i0"}, LO, 1.5, {"trace_id": "t1"})],
+        "labels map<string,string>, timestamp long, value double, "
+        "exemplar_labels map<string,string>",
+    )
+    db.write(None, exemplars=ex)
+    man = db._load_manifest()
+    assert "label_index" in man and db._index_fresh(man)
+    got = db.query_exemplars({"job": "trace-only"}, LO, HI).collect()
+    assert [dict(r["exemplar_labels"]) for r in got] == [{"trace_id": "t1"}]
+    assert dict(got[0]["labels"]) == {"job": "trace-only", "inst": "i0"}

@@ -1413,3 +1413,35 @@ def test_runtimeinfo_and_content_negotiation(spark, tmp_path):
         assert db.query_flat({"a": "b"}, 0, 10**9).count() == 1
     finally:
         srv.shutdown()
+
+
+def test_v1_write_with_exemplars_is_one_commit(spark, tmp_path):
+    """A remote-write 1.0 request's samples and exemplars become
+    visible together: one manifest commit per request."""
+    from monolith_spark.server import MonolithServer
+
+    db = MonolithDB(spark, str(tmp_path / "db"), chunk_size_ms=60_000)
+    v0 = db._load_manifest()["version"]
+    srv = MonolithServer(db, port=0)
+    srv.serve_background()
+    try:
+        ts = proto.TimeSeries(
+            {"__name__": "lat", "job": "api"},
+            [proto.Sample(0.9, 1_000), proto.Sample(1.9, 2_000)],
+            [proto.Exemplar({"trace_id": "abc"}, 0.93, 1_500)],
+        )
+        status, _ = _post(
+            srv.port, "/write",
+            proto.snappy_compress(
+                proto.encode_write_request(proto.WriteRequest([ts]))
+            ),
+        )
+        assert status == 200
+    finally:
+        srv.shutdown()
+    assert db._load_manifest()["version"] == v0 + 1
+    assert db.history()[-1]["op"] == "write"
+    assert db.query_flat({"job": "api"}, 0, 100_000).count() == 2
+    got = db.query_exemplars({"job": "api"}, 0, 100_000).collect()
+    assert [(dict(r["exemplar_labels"]), r["timestamp"], r["value"])
+            for r in got] == [({"trace_id": "abc"}, 1_500, 0.93)]

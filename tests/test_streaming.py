@@ -1482,3 +1482,35 @@ def test_sink_reads_are_empty_before_first_epoch(spark, tmp_path, read, schema):
         f"{f.name} {f.dataType.simpleString()}" for f in got.schema
     ) == schema
     assert got.count() == 0
+
+
+def test_stream_ingest_exemplar_epoch_is_one_commit(spark, tmp_path):
+    # Samples and exemplars of one epoch land in ONE manifest commit:
+    # a crash can never leave the epoch half applied, so the ledger's
+    # replay never appends its samples twice.
+    from monolith_spark.sources.openmetrics import scrape_stream
+
+    scrape_dir = tmp_path / "scrapes"
+    scrape_dir.mkdir()
+    (scrape_dir / "s1.txt").write_text(
+        'lat{job="api"} 0.9 1000 # {trace_id="abc"} 0.93 1500\n'
+        'lat{job="db"} 1.1 2000\n'
+    )
+    db = MonolithDB(spark, str(tmp_path / "db"), chunk_size_ms=60_000)
+    v0 = db._load_manifest()["version"]
+    q = StreamingIngest(db).start(
+        scrape_stream(spark, str(scrape_dir), with_exemplars=True),
+        str(tmp_path / "ckpt"),
+    )
+    q.processAllAvailable()
+    epochs = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    q.stop()
+
+    assert len(epochs) == 1
+    assert db._load_manifest()["version"] == v0 + 1
+    assert db.history()[-1]["op"] == "write"
+    assert db.query_flat({}, 0, 100_000).count() == 2
+    assert [
+        dict(r["exemplar_labels"])
+        for r in db.query_exemplars({}, 0, 100_000).collect()
+    ] == [{"trace_id": "abc"}]
